@@ -35,8 +35,9 @@ Scale notes (100 TB design point):
   continuous-recrawl mode never joins against the seen table; the
   anti-join fallback serves small-seen runs
 - per-host caps bound fetch-task skew regardless of host distribution
-- parse is shuffle-free mapInPandas; no O(rows) driver pulls anywhere in
-  the round loop (stats are single-row aggregates)
+- parse is fused into the one Arrow fetch kernel (shuffle-free mapInArrow
+  when unpaced); no O(rows) driver pulls anywhere in the round loop
+  (stats are single-row aggregates)
 """
 
 from __future__ import annotations

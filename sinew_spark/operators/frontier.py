@@ -211,11 +211,14 @@ def per_group_cap(
     window partitions by group key — bounded at cap rows per group per
     round, exactly like the host window. No extra shuffle beyond the
     group window's.
+
+    A host mapped to several groups (two IPs for one name) takes the
+    smallest group key, so the join never duplicates its frontier rows.
     """
     if cap < 1:
         raise ValueError("cap must be >= 1")
-    m = host_groups.select(
-        F.col("host").alias("_gh"), F.col(group_col).alias("_grp")
+    m = host_groups.groupBy(F.col("host").alias("_gh")).agg(
+        F.min(group_col).alias("_grp")
     )
     out = frontier.join(F.broadcast(m), frontier["host"] == F.col("_gh"), "left")
     grp = F.coalesce(F.col("_grp"), F.concat(F.lit("\x00host:"), F.col("host")))

@@ -1,13 +1,18 @@
-"""Distributed fetch stage — per-host grouped, politeness-paced, retrying.
+"""Distributed fetch stage — one Arrow kernel, politeness-paced, retrying.
 
 Replaces the reference's single-threaded Faraday middleware stack
-(/root/reference/lib/sinew/base.rb:198-240) with a per-host
-``applyInPandas`` stage:
+(lib/sinew/base.rb:198-240) with one Arrow fetch(+parse) kernel
+(``make_fetch_fn``) that ``fetch_rows`` runs under one of two plans:
 
-- frontier rows are hash-partitioned by host; each host group is fetched
+- paced: frontier rows are hash-partitioned by host
+  (``groupBy("host").applyInArrow``); each host group is fetched
   sequentially inside one task => per-host politeness is exact while hosts
   proceed in parallel (the reference's rate limiter is global because it is
   single-threaded; per-host is the distributed generalization, README.md:153)
+- unpaced: shuffle-free ``mapInArrow`` at full partition parallelism
+
+Inside the kernel:
+
 - retry with backoff on 5xx/error, max ``retries`` extra attempts, backoff
   capped at rate_limit (base.rb:232-239 "negates Retry-After: 86400")
 - redirects followed in-stage; every hop is recorded so each hop can be
@@ -24,7 +29,8 @@ from __future__ import annotations
 
 import time
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -57,10 +63,11 @@ FETCHED_SCHEMA = T.StructType(
         # status == 304 marks a not-modified revisit (body not re-transferred)
         T.StructField("etag", T.StringType()),
         T.StructField("last_modified", T.StringType()),
-        # wall-clock of the request incl. retries/redirect hops, for
-        # latency-adaptive politeness (CrawlOptions.adaptive_politeness
-        # -> scheduler.adaptive_host_delay). Observational, not replayed
-        # by oracles (like fetched_at).
+        # transport time of the request summed over its redirect hops and
+        # retry attempts (backoff sleeps excluded), for latency-adaptive
+        # politeness (CrawlOptions.adaptive_politeness ->
+        # scheduler.adaptive_host_delay). Observational, not replayed by
+        # oracles (like fetched_at).
         T.StructField("latency_ms", T.LongType()),
     ]
 )
@@ -439,10 +446,11 @@ def _fetch_one(
     attempt only (a redirect target is a different resource). A 304
     answer is success.
     Returns (status, content_type, resp_body, final_url, n_attempts, hops,
-    error, jar_after, jar_changed, etag_out, lm_out) — jar_changed marks
-    rows that actually set/deleted cookies (the only rows that re-persist
-    the jar); etag_out/lm_out are the FINAL response's validators, for the
-    next revalidation."""
+    error, jar_after, jar_changed, etag_out, lm_out, latency_ms) —
+    jar_changed marks rows that actually set/deleted cookies (the only rows
+    that re-persist the jar); etag_out/lm_out are the FINAL response's
+    validators, for the next revalidation; latency_ms is the transport time
+    summed over every hop of every attempt, without the backoff sleeps."""
     from urllib.parse import urljoin, urlsplit
 
     from sinew_spark.functions.cookies import apply_response_cookies, cookies_for
@@ -453,6 +461,7 @@ def _fetch_one(
     jar_changed = False
     status, ct, resp_body, final_url, error = None, None, None, url, None
     etag_out, lm_out = None, None
+    transport_s = 0.0
 
     # duck-typed transports (objects exposing only resolve_with_cookies /
     # resolve, without subclassing Fetcher) get the base delegation — each
@@ -477,7 +486,7 @@ def _fetch_one(
                 return (*r, cookies, None, None)
 
     def _do(cur, m, b, attempt, first_hop):
-        nonlocal jar_changed, etag_out, lm_out
+        nonlocal jar_changed, etag_out, lm_out, transport_s
         parts = urlsplit(cur)
         host = (parts.hostname or "").lower()
         req_path = parts.path or "/"
@@ -485,6 +494,7 @@ def _fetch_one(
         sent = cookies_for(
             jar, host, req_path, now, secure=(parts.scheme or "").lower() == "https"
         )
+        t_req = time.perf_counter()
         status, ct, resp_body, redirect, after, e_out, l_out = (
             resolve_validated(
                 cur, m, b, attempt, sent, proxy=proxy,
@@ -492,6 +502,7 @@ def _fetch_one(
                 last_modified=last_modified if first_hop else None,
             )
         )
+        transport_s += time.perf_counter() - t_req
         etag_out, lm_out = e_out, l_out
         jar_changed |= apply_response_cookies(
             jar, sent, after, host, req_path, now,
@@ -542,7 +553,7 @@ def _fetch_one(
             cap = rate_limit if rate_limit > 0 else 1.0
             time.sleep(min(cap, backoff_base * (2**attempt)))
     return (status, ct, resp_body, final_url, n_attempts, hops, error, jar,
-            jar_changed, etag_out, lm_out)
+            jar_changed, etag_out, lm_out, int(transport_s * 1000))
 
 
 FETCH_PARSED_SCHEMA = T.StructType(
@@ -573,229 +584,79 @@ def make_fetch_fn(
     proxies: list[str] | None = None,
     parse: bool = False,
 ):
-    """Build the per-host-group pandas function. The group is fetched in
-    (priority, seq) order with rate_limit pacing between network requests.
+    """Build the fetch(+parse) kernel that both plans of fetch_rows run: one
+    Arrow record batch of frontier rows in, one batch of FETCHED_SCHEMA rows
+    (FETCH_PARSED_SCHEMA with parse=True) out, row for row in input order.
+
+    Politeness: every row of a host but the batch's first waits
+    max(rate_limit, its host_delay). In the grouped plan a batch is one
+    host group in (priority, seq) order, so that is the per-host window;
+    the unpaced plan has no delays. Each host's cookie jar (C11) is seeded
+    from its first row's host_cookies and threads through the batch.
 
     parse=True fuses span/link extraction into the same pass (one UDF stage
-    and one Arrow crossing per round instead of two — the body never makes a
-    second JVM->Python trip just to be parsed)."""
-    proxies = proxies or []
+    and one Arrow crossing per round — the body never makes a second
+    JVM->Python trip just to be parsed). Output columns are built as typed
+    pyarrow arrays: PySpark's pandas serializer converts struct columns
+    row by row in Python (~470us/doc measured for spans, ~8us/doc here)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    def fetch_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    proxies = proxies or []
+    arrow_schema = to_arrow_schema(FETCH_PARSED_SCHEMA if parse else FETCHED_SCHEMA)
+    passed = [f.name for f in FRONTIER_ORDER]
+    computed = arrow_schema.names[len(passed):]
+
+    def fetch_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
+        from sinew_spark.functions.cookies import dump_jar, normalize_jar, own_records
+
         if parse:
             from sinew_spark.functions.htmlparse import extract_spans_and_links
 
-        pdf = pdf.sort_values(["priority", "seq"]).reset_index(drop=True)
-        # robots Crawl-delay override: joined per host upstream; politeness
-        # only ever tightens (max of the global limit and the host's ask)
-        effective = rate_limit
-        if "host_delay" in pdf.columns and len(pdf):
-            hd = pdf["host_delay"].iloc[0]
-            if hd is not None and not pd.isna(hd):
-                effective = max(rate_limit, float(hd))
-        # C11: the host group's cookie jar, seeded from host_state via the
-        # site-merged seeding join (all rows of a group share a host, so
-        # the first row's value is the group's). The jar is the scoped RFC
-        # 6265 form; cookies_for/apply_response_cookies inside _fetch_one
-        # do the per-request scoping.
-        from sinew_spark.functions.cookies import dump_jar, normalize_jar, own_records
-
-        group_host = (pdf["host"].iloc[0] or "").lower() if len(pdf) else ""
-        jar = {}
-        if "host_cookies" in pdf.columns and len(pdf) and pdf["host_cookies"].iloc[0]:
-            jar = normalize_jar(pdf["host_cookies"].iloc[0], group_host)
-        out = {
-            "status": [], "content_type": [], "resp_body": [], "final_url": [],
-            "n_attempts": [], "hops": [], "error": [], "fetched_at": [], "proxy": [],
-            "cookies": [], "etag": [], "last_modified": [], "latency_ms": [],
-        }
-        if parse:
-            out["spans"] = []
-            out["links"] = []
-        has_validators = "prior_etag" in pdf.columns
-        first = True
-        for row in pdf.itertuples(index=False):
-            if not first and effective > 0:
-                time.sleep(effective)  # politeness window within the host
-            first = False
+        d = rb.to_pydict()
+        absent = [None] * rb.num_rows
+        host_cookies = d.get("host_cookies", absent)
+        host_delay = d.get("host_delay", absent)
+        prior_etag = d.get("prior_etag", absent)
+        prior_lm = d.get("prior_last_modified", absent)
+        jars: dict = {}
+        rows = []
+        for i, (key, url, host) in enumerate(zip(d["key"], d["url"], d["host"])):
+            host = (host or "").lower()
+            # robots Crawl-delay / throttle asks only ever tighten politeness
+            hd = host_delay[i]
+            delay = hd if hd is not None and hd > rate_limit else rate_limit
+            if host in jars:
+                if delay > 0:
+                    time.sleep(delay)  # politeness window within the host
+            else:
+                jars[host] = normalize_jar(host_cookies[i], host)
             # deterministic proxy rotation (replayable, unlike reference's rand)
-            proxy = proxies[row.key % len(proxies)] if proxies else None
-            p_etag = p_lm = None
-            if has_validators:
-                p_etag = row.prior_etag if isinstance(row.prior_etag, str) else None
-                p_lm = (
-                    row.prior_last_modified
-                    if isinstance(row.prior_last_modified, str)
-                    else None
-                )
-            t_req = time.perf_counter()
+            proxy = proxies[key % len(proxies)] if proxies else None
             (status, ct, body, final_url, n_att, hops, error, jar, jar_chg,
-             e_out, lm_out) = _fetch_one(
-                fetcher, row.url, row.method or "GET", row.body or "", retries, effective,
-                cookies=jar, proxy=proxy, etag=p_etag, last_modified=p_lm,
+             e_out, lm_out, latency_ms) = _fetch_one(
+                fetcher, url, d["method"][i] or "GET", d["body"][i] or "", retries, delay,
+                cookies=jars[host], proxy=proxy, etag=prior_etag[i],
+                last_modified=prior_lm[i],
             )
-            out["latency_ms"].append(int((time.perf_counter() - t_req) * 1000))
-            out["status"].append(status)
-            out["content_type"].append(ct)
-            out["resp_body"].append(body)
-            out["final_url"].append(final_url)
-            out["n_attempts"].append(n_att)
-            out["hops"].append(hops)
-            out["error"].append(error)
-            out["fetched_at"].append(time.time())
-            out["proxy"].append(proxy)
-            out["cookies"].append(
-                dump_jar(own_records(jar, group_host)) if jar_chg else None
-            )
-            out["etag"].append(e_out)
-            out["last_modified"].append(lm_out)
+            jars[host] = jar
+            row = (status, ct, body, final_url, n_att, hops, error, time.time(),
+                   proxy, dump_jar(own_records(jar, host)) if jar_chg else None,
+                   e_out, lm_out, latency_ms)
             if parse:
-                ok = status is not None and 200 <= status < 400 and body
-                if ok:
-                    spans, links = extract_spans_and_links(
-                        body, ct or "text/html", final_url or row.url
-                    )
-                    out["spans"].append(
-                        [
-                            {"kind": k, "text": t, "media_ref": m, "offset": o}
-                            for k, t, m, o in spans
-                        ]
-                    )
-                    out["links"].append(links)
+                if status is not None and 200 <= status < 400 and body:
+                    row += extract_spans_and_links(body, ct or "text/html", final_url or url)
                 else:
-                    out["spans"].append([])
-                    out["links"].append([])
-        pdf = pdf.drop(
-            columns=[
-                c
-                for c in ("host_cookies", "host_delay", "prior_etag",
-                          "prior_last_modified")
-                if c in pdf.columns
-            ]
+                    row += ([], [])
+            rows.append(row)
+        values = list(zip(*rows)) if rows else [()] * len(computed)
+        return pa.RecordBatch.from_arrays(
+            [rb.column(c) for c in passed]
+            + [pa.array(list(v), type=arrow_schema.field(c).type)
+               for c, v in zip(computed, values)],
+            schema=arrow_schema,
         )
-        for c, v in out.items():
-            pdf[c] = v
-        return pdf
 
-    return fetch_group
-
-
-def make_fetch_arrow_fn(
-    fetcher: Fetcher,
-    rate_limit: float,
-    retries: int,
-    proxies: list[str] | None = None,
-    parse: bool = False,
-):
-    """Arrow-native fused fetch(+parse) for mapInArrow. PySpark's pandas
-    serializer converts struct columns row-by-row in Python (~470us/doc
-    measured for the spans column); building typed pyarrow arrays directly
-    costs ~8us/doc. Input batches arrive in frontier order; politeness-paced
-    crawls use the pandas groupBy path instead (ordering within host)."""
-    import pyarrow as pa
-
-    proxies = proxies or []
-
-    def fetch_batches(it):
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        if parse:
-            from sinew_spark.functions.htmlparse import extract_spans_and_links
-
-        schema = FETCH_PARSED_SCHEMA if parse else FETCHED_SCHEMA
-        arrow_schema = to_arrow_schema(schema)
-        span_type = arrow_schema.field("spans").type if parse else None
-        links_type = pa.list_(pa.string()) if parse else None
-        hops_type = pa.list_(pa.string())
-
-        from sinew_spark.functions.cookies import dump_jar, normalize_jar, own_records
-
-        for rb in it:
-            d = rb.to_pydict()
-            n = len(d["url"])
-            host_cookies = d.get("host_cookies", [None] * n)
-            prior_etag = d.get("prior_etag", [None] * n)
-            prior_lm = d.get("prior_last_modified", [None] * n)
-            jars: dict = {}  # per-host jar threading within this batch (C11)
-            status_c, ct_c, body_c, final_c = [], [], [], []
-            natt_c, hops_c, err_c, ts_c, proxy_c, cookies_c = [], [], [], [], [], []
-            etag_c, lm_c, lat_c = [], [], []
-            spans_c, links_c = [], []
-            first = True
-            for i in range(n):
-                if not first and rate_limit > 0:
-                    time.sleep(rate_limit)
-                first = False
-                key, url, host = d["key"][i], d["url"][i], d["host"][i]
-                if host not in jars:
-                    jars[host] = normalize_jar(host_cookies[i], host)
-                proxy = proxies[key % len(proxies)] if proxies else None
-                t_req = time.perf_counter()
-                (status, ct, body, final_url, n_att, hops, error, jar, jar_chg,
-                 e_out, lm_out) = _fetch_one(
-                    fetcher, url, d["method"][i] or "GET", d["body"][i] or "", retries, rate_limit,
-                    cookies=jars[host], proxy=proxy, etag=prior_etag[i],
-                    last_modified=prior_lm[i],
-                )
-                lat_c.append(int((time.perf_counter() - t_req) * 1000))
-                jars[host] = jar
-                status_c.append(status)
-                ct_c.append(ct)
-                body_c.append(body)
-                final_c.append(final_url)
-                natt_c.append(n_att)
-                hops_c.append(hops)
-                err_c.append(error)
-                ts_c.append(time.time())
-                proxy_c.append(proxy)
-                cookies_c.append(
-                    dump_jar(own_records(jar, host)) if jar_chg else None
-                )
-                etag_c.append(e_out)
-                lm_c.append(lm_out)
-                if parse:
-                    if status is not None and 200 <= status < 400 and body:
-                        spans, links = extract_spans_and_links(
-                            body, ct or "text/html", final_url or url
-                        )
-                        spans_c.append(
-                            [
-                                {"kind": k, "text": t, "media_ref": m, "offset": o}
-                                for k, t, m, o in spans
-                            ]
-                        )
-                        links_c.append(links)
-                    else:
-                        spans_c.append([])
-                        links_c.append([])
-            cols = [
-                rb.column(rb.schema.get_field_index(c))
-                for c in ("key", "url", "canonical_url", "method", "body",
-                          "priority", "depth", "seq", "attempt", "host")
-            ]
-            cols += [
-                pa.array(status_c, type=pa.int32()),
-                pa.array(ct_c, type=pa.string()),
-                pa.array(body_c, type=pa.string()),
-                pa.array(final_c, type=pa.string()),
-                pa.array(natt_c, type=pa.int32()),
-                pa.array(hops_c, type=hops_type),
-                pa.array(err_c, type=pa.string()),
-                pa.array(ts_c, type=pa.float64()),
-                pa.array(proxy_c, type=pa.string()),
-                pa.array(cookies_c, type=pa.string()),
-                pa.array(etag_c, type=pa.string()),
-                pa.array(lm_c, type=pa.string()),
-                pa.array(lat_c, type=pa.int64()),
-            ]
-            if parse:
-                cols += [
-                    pa.array(spans_c, type=span_type),
-                    pa.array(links_c, type=links_type),
-                ]
-            yield pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
-
-    return fetch_batches
+    return fetch_batch
 
 
 def fetch_rows(
@@ -808,17 +669,19 @@ def fetch_rows(
     host_delays: DataFrame | None = None,
     validators: DataFrame | None = None,
 ) -> DataFrame:
-    """Run the fetch stage.
+    """Run the fetch stage: the make_fetch_fn kernel under one of two plans.
 
-    rate_limit > 0: group by host, fetch each host group in one task —
-    per-host pacing is exact, hosts run in parallel (one shuffle on host).
+    Paced (rate_limit > 0 or host_delays): groupBy("host").applyInArrow —
+    each host group is fetched in one task, in (priority, seq) order with
+    a missing priority last, so per-host pacing is exact while hosts run
+    in parallel (one shuffle on host).
 
-    rate_limit == 0: the politeness window imposes no ordering constraint,
-    so the groupBy shuffle (and the hot-host serialization it forces) is
-    pure waste — fetch runs as shuffle-free mapInPandas at full partition
-    parallelism. Same output, strictly better plan; this is the bench/replay
-    fast path (the reference likewise zeroes the limiter under SINEW_TEST,
-    base.rb:21).
+    Unpaced: the politeness window imposes no ordering constraint, so the
+    groupBy shuffle (and the hot-host serialization it forces) is pure
+    waste — fetch runs as shuffle-free mapInArrow at full partition
+    parallelism. Same output, strictly better plan; this is the
+    bench/replay fast path (the reference likewise zeroes the limiter
+    under SINEW_TEST, base.rb:21).
 
     host_delays: optional (host, crawl_delay) table from robots
     ``Crawl-delay`` directives (functions/robots.py robots_crawl_delays).
@@ -835,9 +698,13 @@ def fetch_rows(
     If-Modified-Since; a 304 answer costs no body transfer and no parse.
 
     Input columns: key, url, canonical_url, method, body, priority, depth,
-    seq, attempt, host. Output: FETCHED_SCHEMA.
+    seq, attempt, host (+ host_cookies). Output: FETCHED_SCHEMA, or
+    FETCH_PARSED_SCHEMA with parse=True.
     """
     schema = FETCH_PARSED_SCHEMA if parse else FETCHED_SCHEMA
+    cols = [f.name for f in FRONTIER_ORDER]
+    if "host_cookies" in frontier.columns:
+        cols.append("host_cookies")
     if host_delays is not None:
         frontier = frontier.join(
             F.broadcast(
@@ -846,6 +713,7 @@ def fetch_rows(
             "host",
             "left",
         )
+        cols.append("host_delay")
     if validators is not None:
         frontier = frontier.join(
             validators.select(
@@ -856,14 +724,22 @@ def fetch_rows(
             "key",
             "left",
         )
-    if rate_limit > 0 or host_delays is not None:
-        fn = make_fetch_fn(fetcher, rate_limit, retries, proxies, parse=parse)
-        return frontier.groupBy("host").applyInPandas(fn, schema)
-
-    cols = [f.name for f in FRONTIER_ORDER]
-    if "host_cookies" in frontier.columns:
-        cols.append("host_cookies")
-    if "prior_etag" in frontier.columns:
         cols += ["prior_etag", "prior_last_modified"]
-    afn = make_fetch_arrow_fn(fetcher, rate_limit, retries, proxies, parse=parse)
-    return frontier.select(cols).mapInArrow(afn, schema)
+    frontier = frontier.select(cols)
+    fetch_batch = make_fetch_fn(fetcher, rate_limit, retries, proxies, parse=parse)
+    if rate_limit <= 0 and host_delays is None:
+        return frontier.mapInArrow(lambda batches: map(fetch_batch, batches), schema)
+
+    def fetch_host(group):
+        # a missing priority (null, or NaN, which ties with null) sorts last
+        prio = group.column("priority")
+        order = pc.sort_indices(
+            pa.table({"p": pc.if_else(pc.is_nan(prio), None, prio),
+                      "s": group.column("seq")}),
+            sort_keys=[("p", "ascending"), ("s", "ascending")],
+            null_placement="at_end",
+        )
+        batch = group.take(order).combine_chunks().to_batches()[0]
+        return pa.Table.from_batches([fetch_batch(batch)])
+
+    return frontier.groupBy("host").applyInArrow(fetch_host, schema)

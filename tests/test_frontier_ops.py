@@ -180,3 +180,22 @@ def test_per_group_cap_priority_and_validation(spark):
     assert sorted((r.host, r.seq) for r in out) == [("a", 1), ("b", 9)]
     with _pytest.raises(ValueError):
         per_group_cap(fr, cap=0, host_groups=groups)
+
+
+def test_per_group_cap_host_in_two_groups_keeps_each_url_once(spark):
+    from sinew_spark.operators.frontier import per_group_cap
+
+    fr = spark.createDataFrame(
+        [("a", "u1", 0.0, 1), ("a", "u2", 0.0, 2), ("b", "u3", 0.0, 3)],
+        "host string, url string, priority double, seq long",
+    )
+    # host a resolves to two IPs; b shares the second one
+    groups = spark.createDataFrame(
+        [("a", "10.0.0.2"), ("a", "10.0.0.1"), ("b", "10.0.0.2")],
+        "host string, ip string",
+    )
+    out = per_group_cap(fr, cap=10, host_groups=groups).collect()
+    assert sorted(r.url for r in out) == ["u1", "u2", "u3"]
+    # a takes the smallest IP, so it no longer shares b's budget
+    out = per_group_cap(fr, cap=1, host_groups=groups).collect()
+    assert sorted(r.url for r in out) == ["u1", "u3"]

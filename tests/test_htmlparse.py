@@ -1,8 +1,9 @@
 """HTML tree / CSS subset / span extraction tests.
 
 Selector + NodeSet semantics from the reference's test.html fixtures
-(/root/reference/test/test.html, test_nokogiri_ext.rb:5-9) and recipe
-selectors (test/recipes/noko.sinew, xml.sinew).
+(test_nokogiri_ext.rb:5-9; the in-repo copy is tests/fixtures/test_page.html,
+the page the synthetic web serves) and recipe selectors
+(test/recipes/noko.sinew, xml.sinew).
 """
 
 from pathlib import Path
@@ -16,7 +17,7 @@ from sinew_spark.functions.htmlparse import (
     parse_html,
 )
 
-TEST_HTML = Path("/root/reference/test/test.html").read_text()
+TEST_HTML = (Path(__file__).parent / "fixtures" / "test_page.html").read_text()
 
 MOBY = "<body>\n  <h1>Herman Melville - Moby-Dick</h1>\n</body>\n"
 SLIDESHOW = """<!--   A SAMPLE set of slides   -->
@@ -90,8 +91,8 @@ def test_extract_links():
 def test_script_text_skipped():
     root = parse_html(TEST_HTML)
     spans = extract_spans(TEST_HTML)
-    assert not any("alert" in s[1] for s in spans)
-    assert css_select(root, "title")[0].text() == "Title"
+    assert not any("should not appear in text" in s[1] for s in spans)
+    assert css_select(root, "title")[0].text() == "Fixture"
 
 # --- tier-2 selector matrix (child, groups, attr operators, pseudo-classes;
 # semantics per Nokogiri css() / CSS Selectors Level 3) ----------------------
